@@ -10,8 +10,9 @@ object Bench {
     * measured as parquet scans. Hashing each row across all columns
     * forces the full projection while still reducing to one driver row.
     * Maps aren't hashable (Spark disallows it) — serialize them first.
+    * The one forcing action of every timing path (Bench, tools.Measure).
     */
-  private def forceAll(df: DataFrame): Long = {
+  private[graft] def forceAll(df: DataFrame): Long = {
     val cols = df.schema.fields.map { f =>
       f.dataType match {
         case _: MapType => to_json(col(f.name))
@@ -21,6 +22,14 @@ object Bench {
     df.agg(count(lit(1)).as("_n"), sum(xxhash64(cols.toIndexedSeq: _*)).as("_h"))
       .head().getLong(0)
   }
+
+  /** Drift canaries: trivial queries whose code has been untouched
+    * since round 1 (scan/filter, timestamp formatting, binary
+    * projection), timed alongside every measurement to estimate the
+    * host's speed in that window.
+    */
+  private[graft] val Canaries =
+    Seq("q02_filter_project", "q20_ts_bucket", "q39_frame_sample")
 
   /** The headline benchmark workload. q01-q40 are the reference-parity
     * queries — the workload BASELINE.md's full-run ceiling describes —
@@ -108,14 +117,24 @@ object Bench {
     val named =
       if (full) all
       else { val keep = headline(all.map(_._1)).toSet; all.filter(p => keep(p._1)) }
+    // A query that throws in any pass is listed in the artifact's
+    // `failed` array and fails the run (non-zero exit); its
+    // time-to-failure never enters `queries` or the total.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def onePass(tag: String,
         qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Map[String, Double] = qs.map { case (name, fn) =>
+        : Map[String, Double] = qs.flatMap { case (name, fn) =>
       val t0 = System.nanoTime()
-      val n = try { forceAll(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench $tag] $name%-26s $dt%8.2fs rows=$n")
-      name -> dt
+      try {
+        val n = forceAll(fn(spark, sfDir))
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench $tag] $name%-26s $dt%8.2fs rows=$n")
+        Some(name -> dt)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench $tag] $name FAILED: $e")
+        failed += name
+        None
+      }
     }.toMap
     // Per-query min over three full measurements: pass 1 charges every
     // query its one-time codegen compilation (~0.1-0.3 s even for
@@ -132,9 +151,8 @@ object Bench {
       Caches.release(spark)
       spark.sharedState.cacheManager.clearCache()
     }
-    val canaries = Seq("q02_filter_project", "q20_ts_bucket", "q39_frame_sample")
     def inRun(results: Map[String, Double]): Double =
-      canaries.flatMap(c =>
+      Canaries.flatMap(c =>
         results.get(c).zip(quietFloor.get(c)).map { case (v, f) => v / f })
         .foldLeft(0.0)(math.max)
     def measureOnce(): (Map[String, Double], Double) = {
@@ -180,6 +198,7 @@ object Bench {
     // f"$v%.3f" would emit 0,705 — invalid JSON, a parsed:null round.
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    results = results -- failed
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
@@ -193,7 +212,7 @@ object Bench {
     // in multi-minute windows), so per-query deltas can be judged
     // against the canary ratio instead of read raw (README, bench
     // protocol).
-    val drift = canaries.flatMap(c => results.get(c).map(v => "\"" + c + "\":" + num(v)))
+    val drift = Canaries.flatMap(c => results.get(c).map(v => "\"" + c + "\":" + num(v)))
       .mkString("{", ",", "}")
     // window_quality judges the MEASURED window, not the pre-probe:
     // the timed passes' own canary minima (min-of-3+ spread samples)
@@ -207,7 +226,7 @@ object Bench {
       f"[bench] in-run window: ${inRunRatio}%.2fx quiet floor -> $windowQuality")
     val retryTrail = attemptRatios.map(num).mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","workload":"$workload","n_queries":${named.size},"window_quality":"$windowQuality","sentinel_ratio":${num(ratio)},"degraded_retries":$retries,"attempt_ratios":$retryTrail,"drift":$drift,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","workload":"$workload","n_queries":${named.size},"window_quality":"$windowQuality","sentinel_ratio":${num(ratio)},"degraded_retries":$retries,"attempt_ratios":$retryTrail,"drift":$drift,"queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(line)
     // Also drop the line as a repo artifact so the numbers stay
     // readable even if the harness's stdout capture mangles the log.
@@ -218,5 +237,9 @@ object Bench {
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

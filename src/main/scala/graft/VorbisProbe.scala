@@ -1,7 +1,7 @@
 package graft
 
-/** Micro-probe for the Vorbis decoder's per-clip cost (dev tool, the
-  * Mp3Probe pattern): times [[graft.expr.VorbisDecode.decode]] over
+/** Micro-probe for the Vorbis decoder's per-clip cost (dev tool):
+  * times [[graft.expr.VorbisDecode.decode]] over
   * the oracle-fixture shapes (q200 silence, q201 sparse loud/quiet)
   * and over dense full-spectrum long-block streams — the wild-file
   * shape where the IMDCT dominates — plus a direct-vs-FFT IMDCT A/B

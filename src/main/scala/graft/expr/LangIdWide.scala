@@ -118,9 +118,10 @@ object LangIdWide {
   // trick as markerTable, replacing the per-character linear range
   // scan whose constant grew with every added language: Latin text
   // (no range hit) scanned EVERY range per character — measured
-  // 53 ns/char at 167 languages (LangIdProbe, the q117 round-13
-  // regression) vs O(1) here. First-wins semantics preserved by fill
-  // order: ranges are iterated ascending and only unset cells take.
+  // 53 ns/char at 167 languages (SCALE.md, "Round-14: q117 langIdWide
+  // regression attributed and FIXED") vs O(1) here. First-wins
+  // semantics preserved by fill order: ranges are iterated ascending
+  // and only unset cells take.
   private lazy val scriptTable: Array[Short] = {
     val t = new Array[Short](0x10000)
     var k = 0

@@ -442,18 +442,6 @@ object TextAnalysis {
     "yo" -> Seq("ati", "ni", "ti", "pe", "won", "awon", "si", "lati", "fun", "gbogbo"),
     "zu" -> Seq("ukuthi", "futhi", "ngoba", "kodwa", "kanye", "uma", "noma", "lapho", "yena", "khona"))
 
-  /** Argmax over (lang, evidence) pairs with ties to the lowest
-    * language code — the shared CASE-chain shape (codegen'd; a
-    * comparator lambda would exclude the projection from whole-stage
-    * codegen).
-    */
-  private def argmaxLang(pairs: Seq[(String, Column)], m: Column): Column = {
-    val byLang = pairs.sortBy(_._1)
-    byLang.init.foldLeft(when(lit(false), lit(""))) {
-      case (acc, (lang, h)) => acc.when(h === m, lit(lang))
-    }.otherwise(lit(byLang.last._1))
-  }
-
   /** Wide language ID: 167 languages + "und", with a confidence column
     * — the breadth a real multilingual-crawl router needs (the 4-way
     * [[langId]] stays as the minimal reference form). Three tiers,
@@ -508,39 +496,48 @@ object TextAnalysis {
       toks: Column): Column = {
     val t = coalesce(text, lit(""))
     val nonWs = length(regexp_replace(t, "\\s", ""))
-    val scriptHits = ScriptRanges.map { case (lang, cls) =>
+    val script = bestLang(ScriptRanges.map { case (lang, cls) =>
       lang -> length(regexp_replace(t, s"[^$cls]", ""))
-    }
-    val sMax = greatest(scriptHits.map(_._2): _*)
-    val useScript = sMax > 0 && sMax * 10 >= nonWs * 3
-    val stopHits = WideStopwordLists.map { case (lang, words) =>
-      lang -> hitCount(toks, words)
-    }
-    val hMax = greatest(stopHits.map(_._2): _*)
-    val nToks = size(toks)
+    }, "")
+    val sMax = script.getField("hits")
+    val base = script.getField("lang")
     // within-script refinement: when the script argmax lands on a
     // refined prior, distinctive-letter counts pick the language
-    // inside that script (all-zero → the prior); see ScriptRefinements
-    val scriptLang = ScriptRefinements.foldLeft(argmaxLang(scriptHits, sMax)) {
+    // inside that script (all-zero → the prior); see ScriptRefinements.
+    // One flat CASE over the script winner, so the tree stays linear
+    // in the number of priors
+    val scriptLang = ScriptRefinements.foldLeft(when(lit(false), lit(""))) {
       case (acc, (prior, cands)) =>
-        val counts = cands.map { case (l, chars) =>
+        acc.when(base === prior, bestLang(cands.map { case (l, chars) =>
           l -> length(regexp_replace(t, s"[^$chars]", ""))
-        }
-        // reduceLeft, not greatest(...): single-candidate groups
-        // (hi → mr) would fail greatest's 2-arg minimum
-        val rMax = counts.map(_._2).reduceLeft((a, b) => greatest(a, b))
-        when(acc === prior,
-          when(rMax === 0, lit(prior)).otherwise(argmaxLang(counts, rMax)))
-          .otherwise(acc)
-    }
-    val lang = when(useScript, scriptLang)
-      .otherwise(when(hMax === 0, lit("und"))
-        .otherwise(argmaxLang(stopHits, hMax)))
-    val confidence = when(useScript,
-        round(sMax.cast(DoubleType) / nonWs, 4))
-      .otherwise(when(hMax === 0, lit(0.0))
-        .otherwise(round(hMax.cast(DoubleType) / greatest(nToks, lit(1)), 4)))
-    struct(lang.as("lang"), confidence.as("confidence"))
+        }, prior).getField("lang"))
+    }.otherwise(base)
+    val stop = bestLang(WideStopwordLists.map { case (lang, words) =>
+      lang -> hitCount(toks, words)
+    }, "und")
+    val useScript = sMax > 0 && sMax * 10 >= nonWs * 3
+    when(useScript, struct(scriptLang.as("lang"),
+        round(sMax.cast(DoubleType) / nonWs, 4).as("confidence")))
+      .otherwise(struct(stop.getField("lang").as("lang"),
+        round(stop.getField("hits").cast(DoubleType) /
+          greatest(size(toks), lit(1)), 4).as("confidence")))
+  }
+
+  /** Argmax over (lang, evidence) pairs as one `greatest` over
+    * struct(hits, rank, lang): ties go to the lowest language code
+    * (highest rank), and all-zero evidence to `zeroLang`, a zero-hit
+    * candidate ranked above every language. Each evidence expression
+    * appears once (a CASE chain testing `hits = max` per language
+    * would repeat the maximum in every branch), and no comparator
+    * lambda keeps the projection out of whole-stage codegen.
+    */
+  private def bestLang(pairs: Seq[(String, Column)], zeroLang: String): Column = {
+    val byLang = pairs.sortBy(_._1)
+    def cand(hits: Column, rank: Int, lang: String): Column =
+      struct(hits.as("hits"), lit(rank).as("rank"), lit(lang).as("lang"))
+    greatest(cand(lit(0), byLang.size, zeroLang) +: byLang.zipWithIndex.map {
+      case ((lang, hits), i) => cand(hits, byLang.size - 1 - i, lang)
+    }: _*)
   }
 
   /** Quality-score features: length, punctuation ratio, stopword ratio,

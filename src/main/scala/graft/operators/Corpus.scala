@@ -170,20 +170,14 @@ object Corpus {
     // greatest/least-references-_id device and the skew note: the
     // probe always shuffled raw instances on _t, so clustering the
     // histogram on the same exchange adds no new skew surface). The
-    // vocabulary cache is dropped in this form: a cached plan is its
-    // own query execution, so exchange reuse cannot cross it — the
-    // shared form instead re-runs the vocabulary-bounded aggregate
-    // above the one exchange per consumer. A/B knob (graft.ABConf):
-    // spark.graft.lm.sharedExchange=0 restores cached+two-subtree.
-    val shared = !df.sparkSession.conf
-      .getOption("spark.graft.lm.sharedExchange").contains("0")
-    val tokAll = if (shared) toks(df).repartition(col("_t")) else toks(df)
-    val counts0 = tokAll.groupBy("_t").agg(
-      (if (shared) sum(greatest(lit(1L), least(col("_id"), lit(1L))))
-      else count(lit(1))).as("_cnt"))
-    val counts =
-      if (shared) counts0 else counts0.transform(graft.Caches.own)
-    // T and V stay IN the plan as a one-row aggregate of the persisted
+    // vocabulary is not cached: a cached plan is its own query
+    // execution, so exchange reuse cannot cross it — the
+    // vocabulary-bounded aggregate instead re-runs above the one
+    // exchange per consumer.
+    val tokAll = toks(df).repartition(col("_t"))
+    val counts = tokAll.groupBy("_t").agg(
+      sum(greatest(lit(1L), least(col("_id"), lit(1L)))).as("_cnt"))
+    // T and V stay IN the plan as a one-row aggregate of the
     // histogram, broadcast into the log-prob projection — a driver
     // action here would cost a whole job round-trip before the scoring
     // query starts (and a driver barrier at 100 TB)
@@ -235,17 +229,6 @@ object Corpus {
     // the log-prob join exchange on the SAME (a, b) key from the same
     // child, so the exchange is reused rather than the corpus being
     // re-extracted.
-    // A/B knob (graft.ABConf): persist the hashed instance stream so
-    // its two consumers (bigram histogram + log-prob join probe) read
-    // one materialization instead of re-extracting — 3 longs/row, the
-    // favorable case for the columnar cache (vs the token arrays and
-    // decimal postings that measured slower cached)
-    val inst0 = bigramsFromToks(bigramToks(df, idCol, textCol))
-      .select(col("_id"), xxhash64(col("_a")).as("_a"), xxhash64(col("_b")).as("_b"))
-    val inst1 =
-      if (df.sparkSession.conf.getOption("spark.graft.lm.cacheInst").contains("1"))
-        inst0.transform(graft.Caches.own)
-      else inst0
     // ONE instance exchange for both consumers: the log-prob join
     // already shuffles the raw instances on (_a,_b); repartitioning
     // them there explicitly lets the bigram histogram aggregate run
@@ -261,11 +244,9 @@ object Corpus {
     // exposure of partitioning raw instances on (_a,_b) already
     // existed on the join's probe side; this removes the duplicate
     // corpus pass without adding any new skew surface.
-    // A/B knob (graft.ABConf): spark.graft.lm.sharedExchange=0
-    // restores the two-subtree form.
-    val shared = !df.sparkSession.conf
-      .getOption("spark.graft.lm.sharedExchange").contains("0")
-    val inst = if (shared) inst1.repartition(col("_a"), col("_b")) else inst1
+    val inst = bigramsFromToks(bigramToks(df, idCol, textCol))
+      .select(col("_id"), xxhash64(col("_a")).as("_a"), xxhash64(col("_b")).as("_b"))
+      .repartition(col("_a"), col("_b"))
     // token strings hash to 64-bit keys before any exchange (the
     // dedup-posting treatment): histograms and both log-prob joins
     // shuffle 8-byte keys, never strings — same accepted ~V²/2⁶⁵
@@ -281,9 +262,7 @@ object Corpus {
     val vocabRow = broadcast(uni.agg(
       count(lit(1)).cast(DoubleType).as("_V")))
     val bg = inst.groupBy(col("_a"), col("_b"))
-      .agg((if (shared)
-        sum(greatest(lit(1L), least(col("_id"), lit(1L))))
-      else count(lit(1))).as("_cab"))
+      .agg(sum(greatest(lit(1L), least(col("_id"), lit(1L)))).as("_cab"))
     val logp = bg.join(uni.select(col("_t").as("_a"), col("_ca")), "_a")
       .crossJoin(vocabRow)
       .select(col("_a").as("_la"), col("_b").as("_lb"),

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.functions.{HtmlToText, Normalize}
 import graft.model.Schemas
 import graft.operators.{Filters, Merges}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -113,10 +114,21 @@ object JobPipeline {
   def runRegion(spark: SparkSession, rawBatch: DataFrame, stagePath: String,
       resultPath: String, strategy: Strategy, cfg: FilterConfig,
       batchTs: java.sql.Timestamp, displayTz: String = "UTC"): DataFrame = {
-    val history = readOrEmpty(spark, stagePath, Schemas.FeedEntrySchema)
+    val history = readOrEmpty(spark, stagePath,
+      if (strategy == Scd2) Schemas.Scd2Schema else Schemas.FeedEntrySchema)
     val normalized = normalizeEntries(rawBatch, batchTs, displayTz)
     val merged = etlStage(history, normalized, strategy, batchTs)
-    merged.write.mode(SaveMode.Overwrite).parquet(stagePath)
+    // the merge reads the stage table it replaces. Overwriting in place
+    // deletes those files before the write job runs, which only works
+    // while every history scan sits behind an exchange AQE has already
+    // materialized; SCD2's pass-through of expired rows does not. So the
+    // new version is written beside the old one and swapped in.
+    val stage = new Path(stagePath)
+    val next = new Path(stagePath + "_merging")
+    merged.write.mode(SaveMode.Overwrite).parquet(next.toString)
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(stage, true)
+    require(fs.rename(next, stage), s"could not move $next to $stage")
 
     val staged = spark.read.parquet(stagePath)
     val filtered = filterStage(staged, cfg, batchTs)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Corpus, Scale}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators: decontamination, prefix-sum packing,
@@ -666,30 +667,56 @@ class CorpusSpec extends SparkSpec {
     assert(pm(2L) == (("http://b", "latin1", "")))
   }
 
-  test("LM scorers: shared-exchange form is row-identical to the two-subtree form") {
-    // r17: both LM scorers route their instance stream through ONE
-    // explicit (key) exchange whose histogram references _id via
-    // greatest(1, least(_id, 1)) — provably constant 1 — so the two
-    // consumers' subtrees stay canonically equal and the exchange is
-    // reused. This pins the restructure (and the constant-1 identity,
-    // including null ids) against the legacy form the knob restores.
+  test("LM scorers: rows match a count(1) reference and the instance exchange is reused") {
+    // Both LM scorers route their instance stream through ONE explicit
+    // (key) exchange whose histogram references _id via
+    // greatest(1, least(_id, 1)) — constant 1 — so the histogram and
+    // the score probe stay canonically equal and the exchange is
+    // reused. The reference below is the plain form: token strings,
+    // count(1) histograms, no repartition. The blank-text doc drops out
+    // of both forms.
+    import graft.functions.TextAnalysis
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val docs = ((1L to 30L).map(i =>
       (i, s"alpha beta gamma delta tok$i alpha beta")) :+
       ((31L, "alpha beta")) :+ ((32L, ""))).toDF("doc_id", "text")
-    for (op <- Seq("uni", "bi")) {
-      def run(): Set[String] = {
-        val df = if (op == "uni") Corpus.unigramLmScore(docs, "doc_id", "text")
-          else Corpus.bigramLmScore(docs, "doc_id", "text")
-        df.collect().map(_.toString).toSet
-      }
-      spark.conf.set("spark.graft.lm.sharedExchange", "1")
-      val shared = run()
-      spark.conf.set("spark.graft.lm.sharedExchange", "0")
-      val legacy = run()
-      spark.conf.unset("spark.graft.lm.sharedExchange")
+    val dec6 = DecimalType(18, 6)
+    val tk = docs.select($"doc_id",
+      TextAnalysis.tokens(coalesce($"text", lit(""))).as("tk"))
+    val toks = tk.select($"doc_id", explode($"tk").as("t"))
+    val uni = toks.groupBy("t").agg(count(lit(1)).as("c"))
+    def score(inst: DataFrame, logp: DataFrame, keys: Seq[String],
+        n: String, m: String): Set[String] =
+      inst.join(logp, keys).groupBy("doc_id")
+        .agg(count(lit(1)).as(n),
+          round(sum($"lp").cast(DoubleType) / count(lit(1)), 4).as(m))
+        .collect().map(_.toString).toSet
+    val uniRef = score(toks,
+      uni.crossJoin(uni.agg((sum($"c") + count(lit(1))).cast(DoubleType).as("tv")))
+        .select($"t", round(log(($"c" + 1) / $"tv"), 6).cast(dec6).as("lp")),
+      Seq("t"), "n_tokens", "lm_score")
+    val bigrams = tk.select($"doc_id", $"tk", posexplode($"tk").as(Seq("p", "a")))
+      .filter($"p" < size($"tk") - 1)
+      .select($"doc_id", $"a", element_at($"tk", $"p" + 2).as("b"))
+    val v = uni.agg(count(lit(1)).cast(DoubleType).as("v"))
+    val biRef = score(bigrams,
+      bigrams.groupBy("a", "b").agg(count(lit(1)).as("cab"))
+        .join(uni.select($"t".as("a"), $"c".as("ca")), "a").crossJoin(v)
+        .select($"a", $"b", round(log(($"cab" + 1).cast(DoubleType) /
+          ($"ca".cast(DoubleType) + $"v")), 6).cast(dec6).as("lp")),
+      Seq("a", "b"), "n_bigrams", "lm2_score")
+
+    for ((op, ref, reuses) <- Seq(
+        ("uni", uniRef, 2), ("bi", biRef, 1))) {
+      val df = if (op == "uni") Corpus.unigramLmScore(docs, "doc_id", "text")
+        else Corpus.bigramLmScore(docs, "doc_id", "text")
+      val got = df.collect().map(_.toString).toSet
+      val plan = df.queryExecution.executedPlan.toString
       graft.Caches.release(spark)
-      assert(shared == legacy, s"$op: shared-exchange form diverged")
-      assert(shared.nonEmpty)
+      assert(got == ref, s"$op: scorer diverged from the count(1) reference")
+      assert(got.size == 31) // every doc but the blank one scores
+      assert(plan.linesIterator.count(_.contains("ReusedExchange")) == reuses,
+        s"$op: instance exchange not reused:\n$plan")
     }
   }
 }

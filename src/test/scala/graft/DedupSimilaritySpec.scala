@@ -620,6 +620,19 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(dupPairs.contains((0L, 9L)))
   }
 
+  test("langIdWideComposed: the analyzed expression tree stays linear") {
+    // the reference form must stay small enough to analyze, render and
+    // evaluate: a fold that repeats its accumulator per refinement
+    // prior grows exponentially (2.9M nodes against the native
+    // kernel's 14)
+    val plan = Seq("x").toDF("text")
+      .select(TextAnalysis.langIdWideComposed($"text").as("r"))
+      .queryExecution.analyzed
+    var nodes = 0L
+    plan.expressions.foreach(_.foreach(_ => nodes += 1))
+    assert(nodes < 20000L, s"langIdWideComposed has $nodes expression nodes")
+  }
+
   test("langIdWide: script tier, close-language pairs, confidence") {
     val df = Seq(
       // close Latin pairs — the lists are built to separate them

@@ -52,6 +52,39 @@ class PipelineSpec extends SparkSpec {
     assert(out2.filter($"link" === "l1").count() == 1)
   }
 
+  test("regional pipeline: SCD2 from an empty stage path, two runs") {
+    import graft.operators.Merges
+    import org.apache.spark.sql.Row
+    val tmp = java.nio.file.Files.createTempDirectory("graft-scd2").toString
+    def raw(rows: (String, String)*) = rows.map { case (link, title) =>
+      ("DE", link, title, "2024-01-28 10:00:00", "Feed", "rss", "15min", "a role")
+    }.toDF("job_title", "link", "entry_title", "published", "feed_title",
+      "reader", "time_window", "summary")
+    val ts2 = java.sql.Timestamp.valueOf("2024-02-02 00:00:00")
+    val batch1 = raw("l1" -> "Data Engineer", "l2" -> "Analyst")
+    val batch2 = raw("l1" -> "Data Engineer II", "l3" -> "Scientist")
+    val cfg = FilterConfig(daysBack = 30, loadingMode = "overwrite")
+    JobPipeline.runRegion(spark, batch1, s"$tmp/stage", s"$tmp/result",
+      JobPipeline.Scd2, cfg, batchTs).collect()
+    JobPipeline.runRegion(spark, batch2, s"$tmp/stage", s"$tmp/result",
+      JobPipeline.Scd2, cfg, ts2).collect()
+
+    def scd2(hist: org.apache.spark.sql.DataFrame, raw: org.apache.spark.sql.DataFrame,
+        ts: java.sql.Timestamp) = Merges.scd2(hist,
+      JobPipeline.normalizeEntries(raw, ts), Schemas.PrimaryKey, Schemas.CompareCols, ts)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.Scd2Schema)
+    val expected = scd2(scd2(empty, batch1, batchTs), batch2, ts2)
+    val stage = spark.read.parquet(s"$tmp/stage")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(expected.columns.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+    assert(stage.columns.toSet == expected.columns.toSet)
+    assert(rows(stage) == rows(expected))
+    // l1 expired + re-inserted, l2 expired (absent from batch 2), l3 inserted
+    assert(stage.count() == 4)
+    assert(stage.filter($"current_flag" === 1).select("link").as[String]
+      .collect().toSet == Set("l1", "l3"))
+  }
+
   test("resume reader dispatches on extension with the reference's errors") {
     import graft.sources.Documents
     val tmp = java.nio.file.Files.createTempDirectory("graft-resume")
